@@ -83,27 +83,3 @@ def table_to_html(grid: dict[str, Any]) -> str:
         rows.append("<tr>" + "".join(tds) + "</tr>")
     return "<table>" + "".join(rows) + "</table>"
 
-
-def doc_to_html(
-    items: list[dict[str, Any]] | None, tables: list[dict[str, Any]] | None = None
-) -> str:
-    """Extracted document → minimal HTML (viz/debug surface, SURVEY
-    S12 + K8)."""
-    parts = ["<html><body>"]
-    for it in items or []:
-        label = it.get("label") or "text"
-        text = _esc(it.get("text") or "")
-        if label == "title":
-            parts.append(f"<h1>{text}</h1>")
-        elif label == "section_header":
-            parts.append(f"<h2>{text}</h2>")
-        elif label == "list_item":
-            parts.append(f"<li>{text}</li>")
-        elif label == "code":
-            parts.append(f"<pre>{text}</pre>")
-        else:
-            parts.append(f"<p>{text}</p>")
-    for g in tables or []:
-        parts.append(table_to_html(g))
-    parts.append("</body></html>")
-    return "".join(parts)

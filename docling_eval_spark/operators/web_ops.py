@@ -23,6 +23,8 @@ All engine-portable (the DuckDB gate recomputes each value):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -758,6 +760,117 @@ def stratified_sample(
     return df.filter(u < frac)
 
 
+def _nodes(edges: DataFrame) -> DataFrame:
+    """Every node id on either side of a (src, dst) edge list."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _release(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``-ed frame.
+    ``DataFrame.unpersist()`` does not reach them: the checkpointed RDD
+    sits under the frame's LogicalRDD leaf, outside the cache manager,
+    so it is unpersisted directly."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
+def _l1_within(tol: float) -> Callable[[DataFrame, DataFrame], bool]:
+    """Stop probe behind the rank loops' ``tol``: true once the L1
+    delta Σ|rank − prev| over a full outer join on node (a node absent
+    from one side counts as 0.0, the value the output fold gives it)
+    is <= tol. ``tol=0.0`` stops only on an EXACT fixpoint: every
+    summand is then 0.0, so the two vectors are value-identical and
+    the skipped iterations would reproduce them — the output equals
+    the fixed-count run."""
+
+    def within(cur: DataFrame, prev: DataFrame) -> bool:
+        delta = (
+            cur.select("node", F.col("rank").alias("__a"))
+            .join(
+                prev.select("node", F.col("rank").alias("__b")),
+                "node",
+                "full_outer",
+            )
+            .agg(
+                F.sum(
+                    F.abs(
+                        F.coalesce(F.col("__a"), F.lit(0.0))
+                        - F.coalesce(F.col("__b"), F.lit(0.0))
+                    )
+                )
+            )
+            .collect()[0][0]
+        )
+        return delta is not None and delta <= tol
+
+    return within
+
+
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    iterations: int,
+    every: int,
+    stop: Callable[[DataFrame, DataFrame], bool] | None = None,
+    fold: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """The Pregel-style loop (Malewicz et al. 2010) behind every graph
+    operator here: ``state = step(state, it)`` for it = 0 ..
+    iterations−1, then ``fold(state)`` (the state itself when None),
+    returned pinned by an eager localCheckpoint. Steps are relational
+    (joins + map-side-combining aggregations) and collect nothing;
+    only the optional stop probe returns a scalar.
+
+    Lineage cut: left lazy, the plan grows by a step's joins every
+    iteration and analysis time grows superlinearly, so the state is
+    localCheckpoint-ed after every ``every``-th step. 1 suits a step
+    that reads its state twice (join probe + self-union), whose lazy
+    plan would double per step; the rank loops read it once and use 2,
+    since their slim (node, rank) frame is cheap to materialize next
+    to the plan cost it removes — PageRank on the 167k-node sf0.1
+    graph over 10 iterations: every-8 21.3 s, every-4 13.1 s, every-2
+    10.5 s, every-1 12.2 s (checkpoints never change values).
+
+    Release: the loop owns every checkpoint it makes. It frees the
+    previous one once the next is materialized (nothing lazy reads it
+    any more) and the last one once the output is pinned or the call
+    fails, so a call leaves at most one persisted RDD behind: its
+    output. A final state that is already the last checkpoint is
+    returned as is.
+
+    ``stop`` (``tol`` in the rank loops, see :func:`_l1_within`) is
+    probed after every step against the previous state, and the loop
+    ends at the first step where it holds. Probing checkpoints every
+    step (the probe and the next step then share one materialized
+    frame) and each probe is a blocking action — worth it only where
+    early convergence is plausible; on a graph that does not converge
+    it costs a checkpoint and a probe per iteration for nothing."""
+    owned = out = None
+    try:
+        for it in range(iterations):
+            prev = state
+            state = step(state, it)
+            if stop is None and (it + 1) % every:
+                continue
+            state = state.localCheckpoint(eager=True)
+            done = stop is not None and stop(state, prev)
+            if owned is not None:
+                _release(owned)
+            owned = state
+            if done:
+                break
+        out = state if fold is None else fold(state)
+        if out is not owned:
+            out = out.localCheckpoint(eager=True)
+        return out
+    finally:
+        if owned is not None and owned is not out:
+            _release(owned)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -773,174 +886,116 @@ def connected_components(
     largest component's diameter (near-dup clusters are small and
     clique-like, so single digits suffice; pass more for long chains).
 
-    Scale shape per iteration — identical to :func:`page_rank`'s loop
-    and the Pregel-style label propagation it approximates (public
-    technique, e.g. Kiveris et al. 2014 "Connected Components in
-    MapReduce"): ONE equi-join of labels against the symmetrized edge
-    list + ONE map-side-combining min aggregation; no collect, no
-    driver state. Duplicate edges are harmless (min is idempotent),
-    so no distinct pass is spent on the edge list.
-
-    The label frame is DOUBLE-referenced each iteration (join probe +
-    self-union), which would double the logical plan per iteration if
-    left lazy — so every iteration eagerly localCheckpoints the slim
-    (node, component) frame and releases the previous one, bounding
-    both plan depth and executor storage at O(1) (the same fix
-    :func:`page_rank`'s tol mode applies to its double-referenced
-    rank frame)."""
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = und.union(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    Each step (Kiveris et al. 2014, "Connected Components in
+    MapReduce") is ONE equi-join of labels against the symmetrized
+    edge list + ONE min aggregation over those contributions and the
+    current labels. Duplicate edges are harmless (min is idempotent),
+    so no distinct pass is spent on the edge list. The step reads its
+    state twice (join probe + self-union), so it checkpoints every
+    step."""
+    pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    pinned = pairs.union(
+        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).persist()
-    # near-dup pair graphs are tiny next to the corpus that produced
-    # them, but inherit its shuffle partitioning — size the iteration
-    # parallelism from the MEASURED edge count (~64k rows per task,
-    # floor 1, cap at the cluster's cores) so each of the
-    # ``iterations`` join+agg rounds schedules tasks proportional to
-    # the graph, not to the corpus. The count also warms the cache.
-    n_edges = und.count()
-    parts = max(
-        1,
-        min(
-            edges.sparkSession.sparkContext.defaultParallelism,
-            (n_edges + 65_535) // 65_536,
-        ),
-    )
-    if parts < und.rdd.getNumPartitions():
-        und = und.coalesce(parts)
-    comps = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iterations):
-        contrib = und.join(comps, und["a"] == comps["node"]).select(
-            F.col("b").alias("node"), "component"
+    try:
+        # near-dup pair graphs are tiny next to the corpus that
+        # produced them, but inherit its shuffle partitioning — size
+        # the iteration parallelism from the MEASURED edge count (~64k
+        # rows per task, floor 1, cap at the cluster's cores) so each
+        # round schedules tasks proportional to the graph, not to the
+        # corpus. The count also warms the cache.
+        n_edges = pinned.count()
+        parts = max(
+            1,
+            min(
+                edges.sparkSession.sparkContext.defaultParallelism,
+                (n_edges + 65_535) // 65_536,
+            ),
         )
-        prev = comps
-        comps = (
-            contrib.unionByName(comps.select("node", "component"))
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
+        und = pinned
+        if parts < pinned.rdd.getNumPartitions():
+            und = pinned.coalesce(parts)
+
+        def step(comps: DataFrame, _it: int) -> DataFrame:
+            contrib = und.join(comps, und["a"] == comps["node"]).select(
+                F.col("b").alias("node"), "component"
+            )
+            return (
+                contrib.unionByName(comps.select("node", "component"))
+                .groupBy("node")
+                .agg(F.min("component").alias("component"))
+            )
+
+        labels = (
+            und.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
         )
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-    und.unpersist()
-    return comps
+        return _fixpoint(labels, step, iterations, every=1)
+    finally:
+        pinned.unpersist()
 
 
 def page_rank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 2,
     tol: float | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over (src, dst) edges — the classic
     crawl-quality signal (Page et al. 1999, public). Returns
     (node, rank) for every node appearing as src or dst.
 
-    ``tol``: optional convergence stop — after each iteration the L1
-    delta Σ|rank−prev| is computed (one extra id-equi join + scalar
-    agg per iteration, an ACTION, so only pay it when early stopping
-    is plausible) and iteration ends once delta <= tol. The default
-    ``None`` keeps the fixed-count plan (no per-iteration action; the
-    oracle-matched mode).
-
     Simple-sum formulation: rank = (1-d)/N + d * Σ rank(in)/deg(in);
     dangling mass is NOT redistributed (deterministic, cheaper — one
     join per iteration; documented deviation from the stochastic-
-    matrix form, fine for ranking use).
+    matrix form, fine for ranking use). Each step is ONE equi-join of
+    ranks against the out-degree-annotated edge list + one sum, folded
+    back onto the node frame (the uniform teleport pays every node a
+    floor each iteration, so the state is dense).
 
-    Scale shape per iteration: ONE equi-join of ranks against the
-    out-degree-annotated edge list (both shuffled on the same key —
-    the exchange is reused across iterations since the edge side is
-    cached by the optimizer's reuse, or persist it yourself for many
-    iterations) + one map-side-combining sum. No collect, no driver
-    state. Every ``checkpoint_every`` iterations the rank frame is
-    localCheckpoint-ed — without truncation the lazy plan deepens by
-    two joins per iteration and analysis/optimization time grows
-    superlinearly (the classic iterative-algorithm lineage blowup).
-    Default 2: the checkpointed frame is SLIM (node, rank) so the
-    materialization is cheap next to the driver-side plan cost it
-    removes — measured on the 167k-node sf0.1 graph over 10
-    iterations: every-8 21.3s, every-4 13.1s, every-2 10.5s, every-1
-    12.2s (checkpoint values never affect ranks; the oracle gates
-    that). On a cluster the same trade holds until the rank frame's
-    write cost rivals two joins' plan analysis — then raise it."""
-    # persist the two frames every iteration re-reads (slim: node ids
-    # + degree-annotated edges) — without this each of the 2 joins per
-    # iteration re-scans the SOURCE, 20+ scans for 5 iterations; the
-    # final eager checkpoint materializes the result so both can be
-    # unpersisted before returning (no cache accumulation across
-    # repeated calls)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ed = edges.join(out_deg, "src").persist()
-    base = (1.0 - damping) / n_nodes
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for it in range(iterations):
-        # in tol mode every iteration already checkpoints below — a
-        # second checkpoint here would re-materialize for nothing
-        if (
-            tol is None
-            and it > 0
-            and checkpoint_every
-            and it % checkpoint_every == 0
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
-        prev = ranks
-        contribs = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
+    ``tol``: optional convergence stop once the L1 delta to the
+    previous iteration is <= tol (contract on :func:`_l1_within` and
+    :func:`_fixpoint`); set it only when early convergence is
+    plausible. The default ``None`` keeps the fixed-count plan (no
+    per-iteration action; the oracle-matched mode)."""
+    # pinned: every step re-reads both (without them each of its two
+    # joins re-scans the SOURCE)
+    nodes = _nodes(edges).persist()
+    ed = edges.join(
+        edges.groupBy("src").agg(F.count("*").alias("deg")), "src"
+    ).persist()
+    try:
+        n_nodes = nodes.count()
+        base = (1.0 - damping) / n_nodes
+
+        def step(ranks: DataFrame, _it: int) -> DataFrame:
+            contribs = (
+                ed.join(ranks, ed["src"] == ranks["node"])
+                .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("s"))
+            )
+            return nodes.join(
+                contribs, nodes["node"] == contribs["dst"], "left"
+            ).select(
                 "node",
                 (
                     F.lit(base)
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
             )
+
+        return _fixpoint(
+            nodes.withColumn("rank", F.lit(1.0 / n_nodes)),
+            step,
+            iterations,
+            every=2,
+            stop=None if tol is None else _l1_within(tol),
         )
-        if tol is not None:
-            # materialize once so the delta probe and the next
-            # iteration share the computed frame instead of doubling
-            # the join tree (this also covers the checkpoint_every
-            # lineage guard — every tol iteration checkpoints)
-            ranks = ranks.localCheckpoint(eager=True)
-            delta = (
-                ranks.alias("a")
-                .join(prev.alias("b"), F.col("a.node") == F.col("b.node"))
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                .collect()[0][0]
-            )
-            # prev (last iteration's checkpoint) is dead after the
-            # probe — release its blocks instead of waiting for GC,
-            # bounding executor storage at two rank-frame copies
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:
-                pass
-            if delta is not None and delta <= tol:
-                break
-    out = ranks.localCheckpoint(eager=True)
-    nodes.unpersist()
-    ed.unpersist()
-    return out
+    finally:
+        nodes.unpersist()
+        ed.unpersist()
 
 
 def cap_per_key_budget(
@@ -1125,7 +1180,6 @@ def trust_rank(
     seeds: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 2,
     tol: float | None = None,
 ) -> DataFrame:
     """TrustRank (Gyongyi, Garcia-Molina & Pedersen, VLDB 2004):
@@ -1140,52 +1194,32 @@ def trust_rank(
     ``seeds`` is one node id per row (a curated whitelist — hundreds
     to low thousands in practice); ids absent from the graph are
     dropped before |S| is counted, so the teleport vector always sums
-    to 1 over live nodes.
+    to 1 over live nodes. Dangling mass is not redistributed (same
+    documented deviation as :func:`page_rank`; the oracle unrolls the
+    identical formulation).
 
-    Same per-iteration scale shape as :func:`page_rank` — ONE
-    rank-vs-degree-annotated-edge equi-join + one map-side-combining
-    sum, lineage truncated every ``checkpoint_every`` iterations.
-    Dangling mass is not redistributed (same documented deviation as
-    :func:`page_rank`; the oracle unrolls the identical formulation).
+    The trust vector is nonzero only on nodes reachable from the seed
+    set, so the state stays SPARSE: r0 is the seed rows alone, and
+    each step rebuilds only {seeds} ∪ {contribution receivers} —
+    zero-rank nodes contribute exactly 0.0/deg = +0.0 to every sum,
+    so dropping them is value-identical (all addends are
+    non-negative; adding +0.0 never changes an IEEE sum). Seeds that
+    receive no contributions stay present via a union of |S| zero
+    rows folded into the SAME keyed aggregation (+0.0 addends, exact),
+    and the teleport base lands via a broadcast join of the curated
+    seed list (never a node-frame shuffle). Zero-rank nodes re-enter
+    once, at the output fold (full node frame LEFT JOIN state,
+    coalesce 0.0). Where trust reaches few nodes the per-step frames
+    collapse to the reachable set; in the worst case (everything
+    reachable) the shape equals :func:`page_rank`'s step minus its
+    node-frame fold.
 
-    Unlike :func:`page_rank` (whose uniform teleport pays EVERY node
-    a per-iteration floor), the trust vector is nonzero only on
-    nodes reachable from the seed set, so the loop keeps its state
-    SPARSE: r0 is the seed rows alone, and each iteration rebuilds
-    only {seeds} ∪ {contribution receivers} — zero-rank nodes
-    contribute exactly 0.0/deg = +0.0 to every sum, so dropping them
-    is value-identical (all addends are non-negative; adding +0.0
-    never changes an IEEE sum). Seeds that receive no contributions
-    stay present via a union of |S| zero rows folded into the SAME
-    keyed aggregation (+0.0 addends, exact), and the teleport base
-    lands via a broadcast join of the curated seed list (hundreds to
-    low thousands of rows — never a node-frame shuffle). Zero-rank
-    nodes re-enter once, at the final output fold (full node frame
-    LEFT JOIN state, coalesce 0.0). On a graph where trust reaches
-    few nodes the per-iteration frames collapse to the reachable
-    set; in the worst case (everything reachable) the shape equals
-    the dense loop minus its per-iteration node-frame fold.
-
-    ``tol``: optional convergence stop, mirroring :func:`page_rank` —
-    after each iteration the L1 delta of the SPARSE trust vectors
-    (full-outer join on node, absent rows counted as 0.0 — exactly
-    the value the final output fold gives them) is computed and the
-    loop ends once delta <= tol. ``tol=0.0`` stops only on an EXACT
-    fixpoint (every |Δ| summand is 0.0, so the sum is 0.0 iff the
-    vectors are value-identical including membership-as-zero); the
-    skipped iterations would have reproduced the same vector, so the
-    output is identical to the fixed-count run — the oracle, which
-    unrolls all ``iterations`` CTEs, gates that. Costs one extra
-    scalar action + an every-iteration (rather than every
-    ``checkpoint_every``) lineage checkpoint per executed iteration;
-    the default ``None`` keeps the fixed-count plan.
+    ``tol``: optional convergence stop, as in :func:`page_rank`. Set
+    it only when early convergence is plausible: on a graph that does
+    not converge it costs a checkpoint and a blocking probe every
+    iteration. The default ``None`` keeps the fixed-count plan.
     """
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _nodes(edges).persist()
     seeds_in = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
@@ -1193,92 +1227,56 @@ def trust_rank(
         .withColumn("__seed", F.lit(True))
         .persist()
     )
-    n_seeds = seeds_in.count()
-    if n_seeds == 0:
+    ed = edges.join(
+        edges.groupBy("src").agg(F.count("*").alias("deg")), "src"
+    ).persist()
+    try:
+        n_seeds = seeds_in.count()
+        if n_seeds == 0:
+            raise ValueError("trust_rank: no seed id appears in the graph")
+        t_val = 1.0 / n_seeds
+        base_val = (1.0 - damping) * t_val
+        seed_zero = seeds_in.select("node", F.lit(0.0).alias("c"))
+
+        def step(ranks: DataFrame, _it: int) -> DataFrame:
+            contribs = ed.join(ranks, ed["src"] == ranks["node"]).select(
+                F.col("dst").alias("node"),
+                (F.col("rank") / F.col("deg")).alias("c"),
+            )
+            sums = (
+                contribs.unionByName(seed_zero)
+                .groupBy("node")
+                .agg(F.sum("c").alias("s"))
+            )
+            return sums.join(
+                F.broadcast(seeds_in.select("node", "__seed")), "node", "left"
+            ).select(
+                "node",
+                (
+                    F.when(F.col("__seed"), F.lit(base_val)).otherwise(
+                        F.lit(0.0)
+                    )
+                    + F.lit(damping) * F.col("s")
+                ).alias("rank"),
+            )
+
+        def fold(ranks: DataFrame) -> DataFrame:
+            return nodes.join(ranks, "node", "left").select(
+                "node", F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank")
+            )
+
+        return _fixpoint(
+            seeds_in.select("node", F.lit(t_val).alias("rank")),
+            step,
+            iterations,
+            every=2,
+            stop=None if tol is None else _l1_within(tol),
+            fold=fold,
+        )
+    finally:
         nodes.unpersist()
         seeds_in.unpersist()
-        raise ValueError("trust_rank: no seed id appears in the graph")
-    t_val = 1.0 / n_seeds
-    base_val = (1.0 - damping) * t_val
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ed = edges.join(out_deg, "src").persist()
-    ranks = seeds_in.select("node", F.lit(t_val).alias("rank"))
-    seed_zero = seeds_in.select("node", F.lit(0.0).alias("c"))
-    for it in range(iterations):
-        # in tol mode every iteration already checkpoints below — a
-        # second checkpoint here would re-materialize for nothing
-        if (
-            tol is None
-            and it > 0
-            and checkpoint_every
-            and it % checkpoint_every == 0
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
-        prev = ranks
-        contribs = ed.join(ranks, ed["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"),
-            (F.col("rank") / F.col("deg")).alias("c"),
-        )
-        sums = (
-            contribs.unionByName(seed_zero)
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = sums.join(
-            F.broadcast(seeds_in.select("node", "__seed")), "node", "left"
-        ).select(
-            "node",
-            (
-                F.when(F.col("__seed"), F.lit(base_val)).otherwise(
-                    F.lit(0.0)
-                )
-                + F.lit(damping) * F.col("s")
-            ).alias("rank"),
-        )
-        if tol is not None:
-            # materialize once so the delta probe and the next
-            # iteration share the computed frame (this also covers
-            # the checkpoint_every lineage guard — every tol
-            # iteration checkpoints)
-            ranks = ranks.localCheckpoint(eager=True)
-            delta = (
-                ranks.select("node", F.col("rank").alias("__ra"))
-                .join(
-                    prev.select("node", F.col("rank").alias("__rb")),
-                    "node",
-                    "full_outer",
-                )
-                .agg(
-                    F.sum(
-                        F.abs(
-                            F.coalesce(F.col("__ra"), F.lit(0.0))
-                            - F.coalesce(F.col("__rb"), F.lit(0.0))
-                        )
-                    )
-                )
-                .collect()[0][0]
-            )
-            if it > 0:
-                # prev (last iteration's checkpoint) is dead after
-                # the probe — release its blocks instead of waiting
-                # for GC (it == 0 skipped: prev is the seed frame)
-                try:
-                    prev.unpersist(blocking=False)
-                except Exception:
-                    pass
-            if delta is not None and delta <= tol:
-                break
-    out = (
-        nodes.join(ranks, "node", "left")
-        .select(
-            "node", F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank")
-        )
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    seeds_in.unpersist()
-    ed.unpersist()
-    return out
+        ed.unpersist()
 
 
 def host_boilerplate_strip(
@@ -1498,7 +1496,6 @@ def template_rollup(
 def hits(
     edges: DataFrame,
     iterations: int = 4,
-    checkpoint_every: int = 2,
     normalize: str = "final",
 ) -> DataFrame:
     """Fixed-iteration HITS hubs/authorities (Kleinberg 1999, public)
@@ -1508,9 +1505,13 @@ def hits(
     every node on either edge side, each vector scaled to max 1.
 
     Iteration k: auth_k(v) = Σ_{u→v} hub_{k-1}(u), then
-    hub_k(u) = Σ_{u→v} auth_k(v) — the standard alternating update;
-    parallel edges contribute their multiplicity (A^T A on the
-    multigraph, matching the adjacency-matrix form).
+    hub_k(u) = Σ_{u→v} auth_k(v) — the standard alternating update
+    from hub_0 = 1; parallel edges contribute their multiplicity (A^T A
+    on the multigraph, matching the adjacency-matrix form). The loop
+    state is the authority vector: each step is hub_k then auth_{k+1}
+    (two keyed equi-joins + two sums), and the output fold derives the
+    final hubs from the final authorities, so neither vector is ever
+    computed twice.
 
     ``normalize="final"`` (default) skips per-iteration scaling: all
     intermediate scores stay INTEGER-valued doubles (init 1, integer
@@ -1524,110 +1525,97 @@ def hits(
     vectors to sum 1 every iteration at the cost of float determinism
     across engines (values then agree only to rounding).
 
-    Scale shape per iteration: TWO keyed equi-joins (edges⋈hubs on
-    src, edges⋈auths on dst) + two map-side-combining sums — same
-    shape family as :func:`page_rank`, no collect, no driver state;
-    the edge and node frames are persisted once and the hub state is
-    localCheckpoint-ed every ``checkpoint_every`` iterations against
-    lineage blowup.
-
-    The loop keeps its state SPARSE: after the first update, hubs
-    holds only nodes with >=1 out-edge and auths only nodes with >=1
-    in-edge — exactly the rows the loop's inner joins (keyed on edge
-    endpoints) can ever touch, so unlike :func:`page_rank` (whose
-    teleport term pays every node a floor each iteration) no
-    per-iteration fold back onto the full node frame is needed: a
-    node absent from the sparse frame has score exactly 0 and
-    contributes exactly 0.0 to every downstream sum (scores are
-    nonnegative, so no -0.0 edge). Zero-score nodes re-enter once, at
-    the final output fold (nodes LEFT JOIN state, coalesce 0.0) —
-    value-identical to folding every iteration, measured ~25% faster
-    on the 600 k-edge bench graph (two node-frame joins per iteration
-    removed)."""
+    The state is SPARSE: auths holds only nodes with >=1 in-edge and
+    hubs only nodes with >=1 out-edge — exactly the rows the inner
+    joins (keyed on edge endpoints) can ever touch, so unlike
+    :func:`page_rank` (whose teleport term pays every node a floor
+    each iteration) no per-iteration fold back onto the full node
+    frame is needed: a node absent from the sparse frame has score
+    exactly 0 and contributes exactly 0.0 to every downstream sum
+    (scores are nonnegative, so no -0.0 edge). Zero-score nodes
+    re-enter once, at the output fold (nodes LEFT JOIN state,
+    coalesce 0.0) — value-identical to folding every iteration,
+    measured ~25% faster on the 600 k-edge bench graph."""
     if normalize not in ("final", "l1"):
         raise ValueError("normalize must be 'final' or 'l1'")
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
+    nodes = _nodes(edges).persist()
     ed = edges.select("src", "dst").persist()
-    hubs = nodes.withColumn("hub", F.lit(1.0))
-    # read only when iterations == 0 (the loop overwrites it before
-    # any read): the empty sparse frame = "every auth is 0"
-    auths = (
-        ed.select(F.col("dst").alias("node"))
-        .limit(0)
-        .withColumn("auth", F.lit(0.0))
-    )
-    for it in range(iterations):
-        if it > 0 and checkpoint_every and it % checkpoint_every == 0:
-            hubs = hubs.localCheckpoint(eager=True)
-        auths = (
-            ed.join(hubs, ed["src"] == hubs["node"])
-            .groupBy("dst")
-            .agg(F.sum("hub").alias("auth"))
-            .withColumnRenamed("dst", "node")
-        )
-        hubs = (
-            ed.join(auths, ed["dst"] == auths["node"])
-            .groupBy("src")
-            .agg(F.sum("auth").alias("hub"))
-            .withColumnRenamed("src", "node")
-        )
-        if normalize == "l1":
-            a_tot = auths.agg(F.sum("auth").alias("ta"))
-            h_tot = hubs.agg(F.sum("hub").alias("th"))
-            auths = auths.crossJoin(F.broadcast(a_tot)).select(
+    try:
+
+        def scaled(v: DataFrame, col: str) -> DataFrame:
+            if normalize == "final":
+                return v
+            tot = v.agg(F.sum(col).alias("__t"))
+            return v.crossJoin(F.broadcast(tot)).select(
                 "node",
-                F.when(F.col("ta") > 0, F.col("auth") / F.col("ta"))
+                F.when(F.col("__t") > 0, F.col(col) / F.col("__t"))
                 .otherwise(F.lit(0.0))
-                .alias("auth"),
+                .alias(col),
             )
-            hubs = hubs.crossJoin(F.broadcast(h_tot)).select(
-                "node",
-                F.when(F.col("th") > 0, F.col("hub") / F.col("th"))
-                .otherwise(F.lit(0.0))
-                .alias("hub"),
+
+        def auth_of(hubs: DataFrame) -> DataFrame:
+            # unscaled: the next hub update reads it as computed
+            return (
+                ed.join(hubs, ed["src"] == hubs["node"])
+                .groupBy("dst")
+                .agg(F.sum("hub").alias("auth"))
+                .withColumnRenamed("dst", "node")
             )
-    # the final scaling references each vector TWICE (max census +
-    # output join): pin ONE evaluation of the converged state, or the
-    # whole remaining iteration lineage re-executes per reference
-    hubs = hubs.localCheckpoint(eager=True)
-    auths = auths.localCheckpoint(eager=True)
-    # max over the sparse frame equals max over the zero-filled full
-    # frame: every sparse score is > 0 by induction (integer sums
-    # >= 1 in "final" mode, positive fractions in "l1" mode — both
-    # over nonempty in/out-edge sets), so the fold's 0.0 rows can
-    # never be the max; an all-zero vector only happens with zero
-    # edges, where both frames are empty either way
-    maxes = hubs.agg(F.max("hub").alias("mh")).crossJoin(
-        auths.agg(F.max("auth").alias("ma"))
-    )
-    out = (
-        nodes.join(hubs, "node", "left")
-        .join(auths, "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+
+        def hub_of(auths: DataFrame) -> DataFrame:
+            return scaled(
+                ed.join(auths, ed["dst"] == auths["node"])
+                .groupBy("src")
+                .agg(F.sum("auth").alias("hub"))
+                .withColumnRenamed("src", "node"),
+                "hub",
+            )
+
+        hub0 = nodes.withColumn("hub", F.lit(1.0))
+
+        def fold(auths: DataFrame) -> DataFrame:
+            # iterations == 0: the initial vectors, hub 1 and auth 0
+            hubs = hub_of(auths) if iterations else hub0
+            auths = scaled(auths, "auth")
+            # max over the sparse frame equals max over the zero-filled
+            # full frame: every sparse score is > 0 by induction
+            # (integer sums >= 1 in "final" mode, positive fractions in
+            # "l1" mode — both over nonempty in/out-edge sets), so the
+            # fold's 0.0 rows can never be the max; an all-zero vector
+            # only happens with zero edges, where both frames are empty
+            maxes = hubs.agg(F.max("hub").alias("mh")).crossJoin(
+                auths.agg(F.max("auth").alias("ma"))
+            )
+            return (
+                nodes.join(hubs, "node", "left")
+                .join(auths, "node", "left")
+                .select(
+                    "node",
+                    F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+                    F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
+                )
+                .crossJoin(F.broadcast(maxes))
+                .select(
+                    "node",
+                    F.when(F.col("mh") > 0, F.col("hub") / F.col("mh"))
+                    .otherwise(F.lit(0.0))
+                    .alias("hub"),
+                    F.when(F.col("ma") > 0, F.col("auth") / F.col("ma"))
+                    .otherwise(F.lit(0.0))
+                    .alias("auth"),
+                )
+            )
+
+        return _fixpoint(
+            auth_of(hub0 if iterations else hub0.limit(0)),
+            lambda auths, _it: auth_of(hub_of(auths)),
+            max(iterations - 1, 0),
+            every=2,
+            fold=fold,
         )
-        .crossJoin(F.broadcast(maxes))
-        .select(
-            "node",
-            F.when(F.col("mh") > 0, F.col("hub") / F.col("mh"))
-            .otherwise(F.lit(0.0))
-            .alias("hub"),
-            F.when(F.col("ma") > 0, F.col("auth") / F.col("ma"))
-            .otherwise(F.lit(0.0))
-            .alias("auth"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    nodes.unpersist()
-    ed.unpersist()
-    return out
+    finally:
+        nodes.unpersist()
+        ed.unpersist()
 
 
 def temperature_mix_sample(
@@ -1718,13 +1706,11 @@ def crawl_depth(
     ``max_hops`` are ABSENT from the result (a crawl budget never
     schedules them).
 
-    Scale shape per round — identical to :func:`connected_components`:
-    ONE equi-join of the current FRONTIER against the edge list + ONE
-    map-side-combining min aggregation; no collect, no driver state;
-    the slim (node, depth) frame localCheckpoints eagerly each round
-    so plan depth and storage stay O(1). min is idempotent, so
-    duplicate edges cost nothing and already-settled nodes never
-    regress (depth can only stay or shrink).
+    Each round is ONE equi-join of the current FRONTIER against the
+    edge list + ONE min aggregation, as in
+    :func:`connected_components`. min is idempotent, so duplicate
+    edges cost nothing and already-settled nodes never regress (depth
+    can only stay or shrink).
 
     Frontier discipline (textbook BFS, value-identical to joining the
     full distance frame): with unit weights a node's depth is FINAL
@@ -1747,35 +1733,29 @@ def crawl_depth(
         .repartition("a")
         .persist()
     )
-    dist = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("depth", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    for hop in range(1, max_hops + 1):
-        contrib = e.join(frontier, e["a"] == frontier["node"]).select(
-            F.col("b").alias("node"),
-            (F.col("depth") + F.lit(1)).cast("bigint").alias("depth"),
-        )
-        prev = dist
+    try:
+
+        def step(dist: DataFrame, it: int) -> DataFrame:
+            # round it+1: only the nodes settled in round it extend
+            frontier = dist.filter(F.col("depth") == F.lit(it))
+            contrib = e.join(frontier, e["a"] == frontier["node"]).select(
+                F.col("b").alias("node"),
+                (F.col("depth") + F.lit(1)).cast("bigint").alias("depth"),
+            )
+            return (
+                contrib.unionByName(dist.select("node", "depth"))
+                .groupBy("node")
+                .agg(F.min("depth").alias("depth"))
+            )
+
         dist = (
-            contrib.unionByName(dist.select("node", "depth"))
-            .groupBy("node")
-            .agg(F.min("depth").alias("depth"))
-            .localCheckpoint(eager=True)
+            seeds.select(F.col(seed_col).alias("node"))
+            .distinct()
+            .withColumn("depth", F.lit(0).cast("bigint"))
         )
-        # newly settled nodes carry depth == hop exactly; the filter
-        # scans the just-checkpointed frame lazily inside the next
-        # round's join
-        frontier = dist.filter(F.col("depth") == F.lit(hop))
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-    e.unpersist()
-    return dist
+        return _fixpoint(dist, step, max_hops, every=1)
+    finally:
+        e.unpersist()
 
 
 def weighted_sample_topk(

@@ -203,19 +203,6 @@ def evaluate_markdown_text(ds: DataFrame) -> tuple[DataFrame, DataFrame]:
     return per_doc, rollup_markdown_text(per_doc)
 
 
-def evaluate_table_structure(
-    ds: DataFrame, gt_tables_col: str = "tables", pred_tables_col: str | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """TEDS per table + all/simple/complex stats
-    (`table_evaluator.py:150-172`). With a synthetic-identity dataset
-    the GT and pred table columns coincide; a model stage (K10 slot)
-    would populate a separate pred column."""
-    if pred_tables_col is None:
-        pred_tables_col = "pred_tables" if "pred_tables" in ds.columns else "tables"
-    per_table = rows_table_structure(ds, gt_tables_col, pred_tables_col)
-    return per_table, rollup_table_structure(per_table)
-
-
 def rows_table_structure(
     ds: DataFrame, gt_tables_col: str = "tables", pred_tables_col: str = "tables"
 ) -> DataFrame:

@@ -3865,7 +3865,7 @@ def test_trust_rank_sparse_loop_matches_dense_reference(spark):
 
     df = spark.createDataFrame(edge_list, "src string, dst string")
     sdf = spark.createDataFrame([(x,) for x in seed_list], "node string")
-    for iters in (1, 3, 8):  # 8 > checkpoint_every exercises lineage cut
+    for iters in (1, 3, 8):
         got = {r.node: r.rank for r in trust_rank(df, sdf, iters).collect()}
         want = dense_trust(edge_list, seed_list, iters)
         assert set(got) == set(want)
@@ -3926,6 +3926,56 @@ def test_graph_exact_fixpoint_stop_is_value_identical(spark):
         for r in trust_rank(cyclic, cseeds, 8, tol=0.0).collect()
     }
     assert fixed == stopped
+
+
+@pytest.mark.parametrize(
+    "loop",
+    [
+        "connected_components",
+        "page_rank",
+        "page_rank_tol",
+        "trust_rank",
+        "trust_rank_tol",
+        "hits",
+        "crawl_depth",
+    ],
+)
+def test_graph_loop_leaves_only_its_output_pinned(spark, loop):
+    """Every graph loop frees its pinned inputs and each intermediate
+    checkpoint: a call adds at most ONE persisted RDD (its output's),
+    and that output still collects on a second action, so nothing it
+    reads was released."""
+    from docling_eval_spark.operators import web_ops
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "b")],
+        "src string, dst string",
+    )
+    seeds = spark.createDataFrame([("a",)], "node string")
+    run = {
+        "connected_components": lambda: web_ops.connected_components(
+            edges, iterations=4
+        ),
+        "page_rank": lambda: web_ops.page_rank(edges, 5),
+        "page_rank_tol": lambda: web_ops.page_rank(edges, 5, tol=0.0),
+        "trust_rank": lambda: web_ops.trust_rank(edges, seeds, 5),
+        "trust_rank_tol": lambda: web_ops.trust_rank(
+            edges, seeds, 5, tol=0.0
+        ),
+        "hits": lambda: web_ops.hits(edges, iterations=4),
+        "crawl_depth": lambda: web_ops.crawl_depth(edges, seeds, max_hops=4),
+    }[loop]
+    jsc = spark.sparkContext._jsc
+
+    def pinned() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet()}
+
+    before = pinned()
+    out = run()
+    added = pinned() - before
+    assert len(added) <= 1, (loop, len(added))
+    first = sorted(map(tuple, out.collect()))
+    assert first and sorted(map(tuple, out.collect())) == first
 
 
 def test_trust_rank_mass_bounds(spark):
